@@ -16,18 +16,28 @@ down by env vars for local testing:
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import hashlib
+import logging
 import os
+import shutil
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 try:
-    from py4j.protocol import Py4JJavaError
+    from py4j.protocol import Py4JError, Py4JJavaError
 except ImportError:  # Spark Connect images ship no py4j; the narrowed
     # except-sites must still import (they then catch AnalysisException
     # only, and _jdf-style access failures propagate as designed)
-    class Py4JJavaError(Exception):
+    class Py4JError(Exception):
         """Placeholder: never raised when py4j is absent."""
+
+    class Py4JJavaError(Py4JError):
+        """Placeholder: never raised when py4j is absent."""
+
+log = logging.getLogger(__name__)
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 
@@ -50,11 +60,37 @@ DEFAULT_SHUFFLE_PARTITIONS = "32"
 DEFAULT_AQE_MIN_PARTITION_SIZE = "16KB"
 
 
+# Runtime-settable session conf, as (key, env override or None, default).
+# get_spark builds its session with it and tune_for_session applies it to a
+# session built elsewhere.
+RUNTIME_CONF = (
+    ("spark.sql.adaptive.enabled", None, "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", None, "true"),
+    (
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+        "SPARK_GRAFT_AQE_MIN_PARTITION_SIZE",
+        DEFAULT_AQE_MIN_PARTITION_SIZE,
+    ),
+    ("spark.sql.adaptive.skewJoin.enabled", None, "true"),
+    ("spark.sql.session.timeZone", None, "UTC"),
+)
+
+
+def _runtime_conf() -> list[tuple[str, str]]:
+    return [
+        (k, os.environ.get(env, v) if env else v) for k, env, v in RUNTIME_CONF
+    ]
+
+
 def get_spark(app_name: str = "iniz-exporters-spark") -> SparkSession:
     """Build (or get) a SparkSession with the engine's defaults.
 
     Local parallelism comes from ``$SPARK_GRAFT_CPUS`` (default ``*``);
     shuffle width from ``$SPARK_GRAFT_SHUFFLE_PARTITIONS`` (default 32).
+
+    When this call launches the driver JVM, the JVM starts from a
+    class-data-sharing archive of Spark's start-up classes
+    (``_cds_launch``), which the first such launch dumps.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     shuffle = os.environ.get(
@@ -64,26 +100,193 @@ def get_spark(app_name: str = "iniz-exporters-spark") -> SparkSession:
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", shuffle)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get(
-                "SPARK_GRAFT_AQE_MIN_PARTITION_SIZE",
-                DEFAULT_AQE_MIN_PARTITION_SIZE,
-            ),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # events.parquet carries timestamp[ns]; Spark has no nanos type, so
         # read as long up front (Catalog restores microsecond timestamps) —
         # avoids a failed-and-retried first read job
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    return builder.getOrCreate()
+    for k, v in _runtime_conf():
+        builder = builder.config(k, v)
+    launch = _cds_launch()
+    if launch is None:
+        return builder.getOrCreate()
+    java_opts, conf_dir, archive = launch
+    builder = builder.config("spark.driver.defaultJavaOptions", java_opts)
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = conf_dir
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+    if _DUMP_FLAG in java_opts:
+        _dump_archive(spark, archive)
+    return spark
+
+
+# Class-data sharing (CDS) for the driver JVM. A one-shot run (``cli
+# concepts``) pays the JVM's start on every call, and most of that start is
+# loading and parsing Spark's classes. A dynamic CDS archive maps them
+# already parsed. On a 4-vCPU KVM guest at local[2] (perfbench
+# concepts_export, 10 interleaved pairs) the median set-up fell from 7.17 s
+# to 4.68 s, and the cold export did not slow. The archive lives in the
+# user's cache, is keyed on the Java install and Spark's jars, and is
+# written once by the first launch that finds it missing (``VM.cds
+# dynamic_dump`` right after the session starts, so nothing depends on a
+# clean JVM exit). The JVM silently ignores an archive that does not match
+# its classpath.
+_DUMP_FLAG = "-XX:+RecordDynamicDumpInfo"
+# the dump otherwise prints dozens of signed-jar and preload warnings
+_CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
+
+
+def _templates_only(conf_dir: str) -> bool:
+    """True iff ``conf_dir`` holds nothing Spark reads (only ``*.template``
+    files, or nothing at all), so an empty directory can stand in for it:
+    the dump refuses a non-empty directory on the classpath."""
+    try:
+        names = os.listdir(conf_dir)
+    except FileNotFoundError:
+        return True
+    return all(n.endswith(".template") for n in names)
+
+
+def _java_home() -> str:
+    """The Java install spark-submit runs: ``$JAVA_HOME``, else ``java``
+    on the PATH."""
+    if os.environ.get("JAVA_HOME"):
+        return os.environ["JAVA_HOME"]
+    java = shutil.which("java")
+    if java is None:
+        raise FileNotFoundError("no JAVA_HOME and no java on the PATH")
+    return os.path.dirname(os.path.dirname(os.path.realpath(java)))
+
+
+def _archive_key(java_home: str, spark_home: str) -> str:
+    """Hash of the Java release file and of every Spark jar's name, size
+    and mtime: a new JDK or a changed jar means a new archive."""
+    h = hashlib.sha256()
+    with open(os.path.join(java_home, "release"), "rb") as f:
+        h.update(f.read())
+    jars = os.path.join(spark_home, "jars")
+    for name in sorted(os.listdir(jars)):
+        if name.endswith(".jar"):
+            st = os.stat(os.path.join(jars, name))
+            h.update(f"{name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    return h.hexdigest()[:16]
+
+
+def _cds_launch() -> tuple[str, str, str] | None:
+    """How get_spark launches the driver JVM with CDS, as (driver java
+    options, SPARK_CONF_DIR for the launch, archive path), or None for a
+    normal start.
+
+    None when the driver JVM already runs (a live gateway, or a
+    spark-submit parent), or when the conf directory holds real files (they
+    must stay on the classpath). Any failure to set up the cache also gives
+    None, with one warning.
+    """
+    from pyspark import SparkContext
+
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return None
+    from pyspark.find_spark_home import _find_spark_home
+
+    spark_home = _find_spark_home()
+    try:
+        # the conf dir spark-submit puts on the driver's classpath
+        if not _templates_only(os.environ.get("SPARK_CONF_DIR")
+                               or os.path.join(spark_home, "conf")):
+            return None
+        cache = os.path.join(
+            os.environ.get("XDG_CACHE_HOME")
+            or os.path.join(os.path.expanduser("~"), ".cache"),
+            "iniz-exporters-spark",
+        )
+        conf_dir = os.path.join(cache, "empty-conf")
+        os.makedirs(conf_dir, exist_ok=True)
+        if not os.access(cache, os.W_OK):
+            raise PermissionError(f"cache {cache} is not writable")
+        archive = os.path.join(
+            cache, f"driver-{_archive_key(_java_home(), spark_home)}.jsa"
+        )
+    except OSError as e:
+        log.warning("driver JVM starts without a CDS archive: %s", e)
+        return None
+    if any(c.isspace() or c in "'\"\\" for c in archive):
+        # spark-submit splits the java options on whitespace and quotes
+        log.warning("driver JVM starts without a CDS archive: "
+                    "cache path %r needs quoting", archive)
+        return None
+    use = (f"-XX:SharedArchiveFile={archive}" if os.path.isfile(archive)
+           else _DUMP_FLAG)
+    return f"{use} {_CDS_QUIET}", conf_dir, archive
+
+
+def _dump_archive(spark: SparkSession, archive: str) -> None:
+    """Dump the running driver JVM's loaded classes to ``archive`` (via the
+    DiagnosticCommand MBean's ``vmCds``), then drop archives of other keys.
+    A failure leaves no archive and logs one warning."""
+    jvm = spark.sparkContext._jvm
+    cls, system = jvm.java.lang.Class, jvm.java.lang.System
+    # JDK 17 refuses (and exits the JVM) when a non-empty directory is on
+    # the classpath: check first
+    for entry in system.getProperty("java.class.path").split(os.pathsep):
+        if os.path.isdir(entry) and os.listdir(entry):
+            log.warning("no CDS archive dumped: non-empty directory %s on "
+                        "the driver classpath", entry)
+            return
+    tmp = f"{archive}.{os.getpid()}.tmp"
+    gw = spark.sparkContext._gateway
+
+    def array(of, *items):
+        a = gw.new_array(of, len(items))
+        for i, x in enumerate(items):
+            a[i] = x
+        return a
+
+    try:
+        # JmxMBeanServer is not exported: call invoke through its interface
+        invoke = cls.forName("javax.management.MBeanServerConnection").getMethod(
+            "invoke", array(cls, *(cls.forName(n) for n in (
+                "javax.management.ObjectName", "java.lang.String",
+                "[Ljava.lang.Object;", "[Ljava.lang.String;"))))
+        String, Object = jvm.java.lang.String, jvm.java.lang.Object
+        args = array(
+            Object,
+            jvm.javax.management.ObjectName(
+                "com.sun.management:type=DiagnosticCommand"),
+            "vmCds",
+            array(Object, array(String, "dynamic_dump", tmp)),
+            array(String, "[Ljava.lang.String;"),
+        )
+        # the dump announces its file on the JVM's stdout, which is the
+        # caller's: a CLI's stdout must carry only its own output
+        stdout = system.out
+        system.setOut(jvm.java.io.PrintStream(
+            jvm.java.io.OutputStream.nullOutputStream()))
+        try:
+            invoke.invoke(
+                jvm.java.lang.management.ManagementFactory
+                .getPlatformMBeanServer(), args)
+        finally:
+            system.setOut(stdout)
+        os.replace(tmp, archive)
+    except (OSError, Py4JError) as e:
+        log.warning("no CDS archive dumped: %s", e)
+        with contextlib.suppress(OSError):
+            os.remove(tmp)
+        return
+    keep = os.path.basename(archive)
+    for old in glob.glob(os.path.join(os.path.dirname(archive), "driver-*.jsa")):
+        if os.path.basename(old) != keep:
+            with contextlib.suppress(OSError):
+                os.remove(old)
 
 
 def metadata_df(spark: SparkSession, rows, schema):
@@ -113,19 +316,7 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
     are runtime-mutable can be set here (AQE + timezone are; master/memory
     are not).
     """
-    for k, v in (
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        (
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get(
-                "SPARK_GRAFT_AQE_MIN_PARTITION_SIZE",
-                DEFAULT_AQE_MIN_PARTITION_SIZE,
-            ),
-        ),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-    ):
+    for k, v in _runtime_conf():
         try:
             spark.conf.set(k, v)
         except AnalysisException:

@@ -192,6 +192,7 @@ _FAST_REPS = {
     "ccnet_bucket_q", "mann_whitney_q", "span_dedup_trim",
     "association_rules_q", "dataset_card_q", "exact_substring_dedup_q",
 }
+assert _FAST_REPS <= set(SENSITIVE), _FAST_REPS - set(SENSITIVE)
 
 
 @pytest.mark.parametrize(
