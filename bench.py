@@ -14,10 +14,13 @@ carries only the headline medians.
 Per-query times are the MEDIAN of $SPARK_GRAFT_BENCH_RUNS (default 3)
 interleaved passes — single-run times at sf0.1 carry ±2× JIT/GC noise
 (PERFORMANCE.md), so round-over-round comparisons need the median, and the
-raw runs are emitted alongside for spread inspection.
+raw runs are emitted alongside for spread inspection. A query whose spread
+exceeds 25 % of its median gets extra passes, up to 5 in total.
+$SPARK_GRAFT_BENCH_DETAIL redirects the side artifact (tests point it at a
+temp dir).
 
-Cross-scale slope: unless $SPARK_GRAFT_BENCH_SLOPE=0, each query also runs
-at the 10×-smaller scale and the JSON carries
+Cross-scale slope: when the 10×-smaller scale exists next to the SF dir,
+each query also runs there and the JSON carries
 {"slope": {name: {"sf_small": sec, "sf_big": sec, "ratio": big/small}}}.
 The ratio is the scaling diagnostic no single-scale run can give: a query
 whose time grows far beyond ~10× across a 10× data step has a superlinear
@@ -36,11 +39,11 @@ times two FIXED reference probes before the warm-up and again after the
 suite: (a) a pure-JVM probe, sum over spark.range(2e8) — CPU/codegen
 speed, no I/O; (b) a fixed parquet scan-agg over sf0.01 lineitem — disk +
 scan path. Both land in the final JSON line ("canary") and, with
-loadavg/cpu-count/warm-up time, in BENCH_DETAIL ("env"). Round-over-round
-rule: a query delta is a real signal only if it exceeds the recorded
-spread AND survives dividing by the canary ratio between the two rounds
-(canary_r{N} / canary_r{N-1}); a uniform shift that tracks the canary is
-the machine, not the code.
+loadavg/cpu-count/warm-up time, in BENCH_DETAIL ("env"). Compare two
+artifacts with tools/bench_compare.py: a query delta is a real signal only
+if it exceeds the recorded spread AND survives its median-of-ratios
+normalization, which uses the raw post canary; a uniform shift that tracks
+the canary is the machine, not the code.
 """
 
 from __future__ import annotations
@@ -97,35 +100,6 @@ _SLOPE_EXTRA = [
 # headline entries land 3-3.6 and are comfortably sub-linear. Judge a
 # rechecked ratio against ~4, not the single-pass ~2.5 bar.
 SLOPE_RECHECK_THRESHOLD = 2.3
-
-
-# Fixed reference canary (VERDICT r14 #2): the pre/post-averaged probe
-# timings from the committed r15 round-open baseline artifact
-# (BENCH_SELF_r15_before.stdout: pre jvm 0.348 / scan 0.425, post jvm
-# 0.422 / scan 0.222 — idle 32-core window, loadavg 1.07). Dividing a
-# run's probes by these turns machine speed into a dimensionless index
-# (1.0 = that reference window by construction, since _canary_index
-# averages pre/post the same way; 2.0 = this box/window ran the fixed
-# probes 2× slower), so `normalized_total` in the final JSON is directly
-# comparable across rounds without hand arithmetic: a same-code A/A on a
-# fast and a loaded window should read ~flat normalized while the raw
-# totals differ by the machine shift.
-_CANARY_REF = {"jvm_range_sec": 0.385, "parquet_scan_sec": 0.324}
-
-
-def _canary_index(pre: dict, post: dict) -> float | None:
-    """Geometric mean over both probes of (measured / reference), with the
-    pre/post pair averaged per probe — one number for 'how slow was this
-    window relative to the committed reference'."""
-    import math
-
-    ratios = []
-    for k, ref in _CANARY_REF.items():
-        vals = [d[k] for d in (pre, post) if d.get(k)]
-        if not vals or not ref:
-            return None
-        ratios.append((sum(vals) / len(vals)) / ref)
-    return round(math.exp(sum(math.log(r) for r in ratios) / len(ratios)), 3)
 
 
 def _canary_scan_path(sf_dir: str) -> str:
@@ -218,10 +192,8 @@ def main() -> None:
     # regression. Queries over the threshold get extra passes (to 5 total)
     # and the median is taken over all runs; recorded spreads let the next
     # round's comparison know which deltas are noise.
-    spread_threshold = float(
-        os.environ.get("SPARK_GRAFT_BENCH_SPREAD", "0.25")
-    )
-    max_runs = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_RUNS", "5"))
+    spread_threshold = 0.25
+    max_runs = 5
 
     def spread(r: list[float]) -> float:
         med = statistics.median(r)
@@ -260,13 +232,11 @@ def main() -> None:
 
     # Cross-scale slope: one timed pass at the 10×-smaller SF (it exists
     # for every driver scale except the smallest probe scale).
-    small_dir = None
-    if os.environ.get("SPARK_GRAFT_BENCH_SLOPE", "1") != "0":
-        try:
-            cand = f"{os.path.dirname(sf_dir.rstrip('/'))}/sf{float(sf) / 10:g}"
-            small_dir = cand if os.path.isdir(cand) else None
-        except ValueError:
-            small_dir = None
+    try:
+        cand = f"{os.path.dirname(sf_dir.rstrip('/'))}/sf{float(sf) / 10:g}"
+        small_dir = cand if os.path.isdir(cand) else None
+    except ValueError:
+        small_dir = None
     if small_dir:
         slope: dict[str, dict[str, float]] = {}
         for name, spec in headline.items():
@@ -354,11 +324,7 @@ def main() -> None:
     # overwrites BENCH_DETAIL.json — prefer SPARK_GRAFT_BENCH_DETAIL for
     # probes). bench_compare therefore prints each side's recorded
     # loadavg next to the roles; judge load from that, not the role.
-    # Overridable via SPARK_GRAFT_BENCH_ROLE (the committed idle
-    # references BENCH_SELF_r*.json set role=self-idle).
-    role = os.environ.get("SPARK_GRAFT_BENCH_ROLE") or (
-        "driver" if (not detail_path and sf_val == 0.1) else "self"
-    )
+    role = "driver" if (not detail_path and sf_val == 0.1) else "self"
     detail["role"] = role
     if not detail_path:
         repo_root = os.path.dirname(os.path.abspath(__file__))
@@ -380,16 +346,9 @@ def main() -> None:
     # "canary" is ~120 bytes — small enough for the tail capture, and it
     # makes the committed BENCH_r{N}.json self-evidencing: divide two
     # rounds' canaries to separate machine drift from plan regressions.
-    # Canary-normalized verdict (VERDICT r14 #2, additions-only):
-    # `canary_index` is this window's speed relative to the committed
-    # reference window (_CANARY_REF); `normalized_total` divides the raw
-    # total by it, so round-over-round "regressed/improved" can be read
-    # off two artifacts directly instead of dividing canaries by hand.
-    idx = _canary_index(canary_pre, canary_post)
-    total = round(sum(times.values()), 3)
     print(json.dumps({
         "metric": "headline_query_wall_seconds",
-        "value": total,
+        "value": round(sum(times.values()), 3),
         "unit": "sec",
         "queries": times,
         "sf": sf_val,
@@ -399,10 +358,6 @@ def main() -> None:
             "post": canary_post,
             "loadavg_1m": round(loadavg_pre[0], 2),
         },
-        "canary_index": idx,
-        "normalized_total": (
-            round(total / idx, 3) if idx else None
-        ),
     }))
 
 

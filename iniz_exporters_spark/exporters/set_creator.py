@@ -2,17 +2,13 @@
 
 Pure reshape: row 0 of a concepts CSV defines the set; every following row
 becomes a membership row with a positional Sort Weight. Row order is the
-semantic input (SURVEY §2.5 near-miss), so the core transform is a plain
-row-list function; a DataFrame wrapper handles the distributed case with an
-explicit order column.
+semantic input (SURVEY §2.5 near-miss), so the transform is a plain
+row-list function over the file's rows, read on the driver.
 """
 
 from __future__ import annotations
 
 import csv
-
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
 
 
 def concept_set_rows(concepts: list[dict]) -> tuple[list[str], list[dict]]:
@@ -50,26 +46,3 @@ def concept_set_csv(infile: str, outfile: str) -> None:
         w = csv.DictWriter(f, fieldnames=fieldnames)
         w.writeheader()
         w.writerows(rows)
-
-
-def concept_set_df(df: DataFrame, order_col: str) -> DataFrame:
-    """Distributed variant: ``order_col`` supplies the file-position
-    semantics (first row = the set definition)."""
-    w = Window.orderBy(order_col)
-    ranked = df.withColumn("__rn", F.row_number().over(w))
-    head = ranked.filter(F.col("__rn") == 1).select(
-        F.col("uuid").alias("__set_uuid")
-    )
-    names = [c for c in df.columns if "Fully specified name:" in c]
-    return (
-        ranked.filter(F.col("__rn") > 1)
-        .crossJoin(F.broadcast(head))
-        .select(
-            F.col("__set_uuid").alias("Concept"),
-            F.col("uuid").alias("Member"),
-            *[F.col(f"`{n}`").alias("#" + n) for n in names],
-            F.lit("CONCEPT-SET").alias("Member Type"),
-            (F.col("__rn") - 1).alias("Sort Weight"),
-            F.col("`Void/Retire`").alias("Void/Retire"),
-        )
-    )

@@ -6,9 +6,9 @@ concept_csv_export.py:183-190, location_csv_export.py:98-102).
 
 A distributed engine writes one file per partition, so this helper keeps the
 plan distributed through the final sort and only merges at the very end:
-``coalesce(1)`` for metadata-scale exports (the reference's regime). For
-data-scale outputs, pass ``single_file=False`` to emit a part-file directory
-instead — same header/order/NULL policy per file.
+``write_single_csv`` uses ``coalesce(1)`` for metadata-scale exports (the
+reference's regime); ``write_merged_csv`` streams range-ordered part files
+into one file for data-scale outputs.
 """
 
 from __future__ import annotations
@@ -25,22 +25,12 @@ def write_single_csv(
     df: DataFrame,
     path: str,
     columns: list[str] | None = None,
-    single_file: bool = True,
 ) -> None:
     if columns:
         df = df.select(*[f"`{c}`" for c in columns])
     # NULL→"" policy: emptyValue/nullValue write empty strings, matching the
     # reference's NULL collapse (concept_csv_export.py:577) without its
     # literal-"NULL" corruption bug.
-    writer = (
-        df.write.option("header", True)
-        .option("nullValue", "")
-        .option("emptyValue", "")
-        .mode("overwrite")
-    )
-    if not single_file:
-        writer.csv(path)
-        return
     tmp = tempfile.mkdtemp(prefix="iniz_csv_")
     try:
         df.coalesce(1).write.option("header", True).option("nullValue", "").option(

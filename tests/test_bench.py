@@ -16,8 +16,7 @@ import pytest
 # warmup + timed passes + slope radar at sf0.001 — is minutes even idle
 # and was the single largest sink in the default pytest path. The driver
 # itself exercises this exact contract every round; the subprocess test
-# runs at round close via --runslow. The pure-python final-line pieces
-# (canary index arithmetic) stay in the fast path below.
+# runs at round close via --runslow.
 @pytest.mark.slow
 def test_bench_emits_one_json_line_with_all_headline_queries(tmp_path):
     from iniz_exporters_spark.queries import REGISTRY
@@ -122,23 +121,6 @@ def test_bench_emits_one_json_line_with_all_headline_queries(tmp_path):
     assert env_block["session_startup_sec"] > 0
     with open(detail_path) as f:
         assert json.load(f)["runs"] == detail["runs"]
-
-
-def test_canary_index_normalizes_machine_speed():
-    """Fast-path contract for the canary-normalized verdict (VERDICT r14
-    #2): the reference window reads index 1.0 by construction, a
-    uniformly 2×-slower window reads 2.0, and a missing probe yields
-    None (so normalized_total degrades to null, never a crash)."""
-    from bench import _CANARY_REF, _canary_index
-
-    ref = dict(_CANARY_REF)
-    assert _canary_index(ref, ref) == 1.0
-    double = {k: 2 * v for k, v in ref.items()}
-    assert _canary_index(double, double) == 2.0
-    # pre/post averaged per probe: (1x + 3x)/2 = 2x
-    triple = {k: 3 * v for k, v in ref.items()}
-    assert _canary_index(ref, triple) == 2.0
-    assert _canary_index({}, {}) is None
 
 
 def test_committed_bench_detail_is_a_driver_artifact():

@@ -63,8 +63,8 @@ def test_window_targets_never_driver_checked_queries():
         f"{already}. "
         "REMEDY (the post-drain round-open convention, PERFORMANCE.md "
         "'\u00a7driver-window — r13 plan'): seat an EMPTY rotation — set "
-        "_WINDOW = _R{N+1}_WINDOW = [] in __spark_entry__.py (new "
-        "pre-swept registrations may ride it); _reseat_names() derives "
+        "_WINDOW = [] (frozen registry) in __spark_entry__.py; "
+        "_reseat_names() derives "
         "every remaining first-50 slot from the committed "
         "CORRECTNESS_r*.json artifacts — plan-changed names first "
         "(extend _PLAN_CHANGED with the round's edits), then "

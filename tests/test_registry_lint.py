@@ -41,26 +41,27 @@ def _fast_scope():
     return names
 
 
-def _complex_offenders(spark, names):
-    offenders = {}
+def _lint_frame(df):
+    """(complex-typed output columns, duplicated output column names)."""
+    complex_cols = [
+        f.name for f in df.schema.fields if isinstance(f.dataType, _COMPLEX)
+    ]
+    cols = df.columns
+    dupe_cols = sorted({c for c in cols if cols.count(c) > 1})
+    return complex_cols, dupe_cols
+
+
+def _offenders(spark, names):
+    """(complex, duplicate) offenders, each name -> columns, over every
+    query in ``names`` with one frame build per query."""
+    complex_off, dupe_off = {}, {}
     for name in sorted(names):
-        df = REGISTRY[name].fn(spark, SF)
-        bad = [
-            f.name for f in df.schema.fields if isinstance(f.dataType, _COMPLEX)
-        ]
+        bad, dupes = _lint_frame(REGISTRY[name].fn(spark, SF))
         if bad:
-            offenders[name] = bad
-    return offenders
-
-
-def _dupe_offenders(spark, names):
-    offenders = {}
-    for name in sorted(names):
-        cols = REGISTRY[name].fn(spark, SF).columns
-        dupes = sorted({c for c in cols if cols.count(c) > 1})
+            complex_off[name] = bad
         if dupes:
-            offenders[name] = dupes
-    return offenders
+            dupe_off[name] = dupes
+    return complex_off, dupe_off
 
 
 def test_driver_facing_query_outputs_are_canonicalizable(spark):
@@ -69,18 +70,7 @@ def test_driver_facing_query_outputs_are_canonicalizable(spark):
     cost of these lints (~60 s per sweep), so the two driver-facing
     variants share it (r15 gate-budget trim; the registry-wide sweeps
     below still run one pass per lint at round close)."""
-    complex_off, dupe_off = {}, {}
-    for name in sorted(_fast_scope()):
-        df = REGISTRY[name].fn(spark, SF)
-        bad = [
-            f.name for f in df.schema.fields if isinstance(f.dataType, _COMPLEX)
-        ]
-        if bad:
-            complex_off[name] = bad
-        cols = df.columns
-        dupes = sorted({c for c in cols if cols.count(c) > 1})
-        if dupes:
-            dupe_off[name] = dupes
+    complex_off, dupe_off = _offenders(spark, _fast_scope())
     assert complex_off == {}, (
         "driver-facing queries with pandas-unhashable output columns: "
         f"{complex_off}"
@@ -90,7 +80,7 @@ def test_driver_facing_query_outputs_are_canonicalizable(spark):
 
 @pytest.mark.slow
 def test_no_query_outputs_complex_types(spark):
-    offenders = _complex_offenders(spark, set(REGISTRY))
+    offenders = _offenders(spark, set(REGISTRY))[0]
     assert offenders == {}, (
         "queries with pandas-unhashable (complex-typed) output columns — the "
         f"driver canonicalizer will record them as err: {offenders}"
@@ -100,7 +90,7 @@ def test_no_query_outputs_complex_types(spark):
 @pytest.mark.slow
 def test_no_query_outputs_duplicate_column_names(spark):
     """Duplicate output names break the sorted-by-name canonicalization."""
-    offenders = _dupe_offenders(spark, set(REGISTRY))
+    offenders = _offenders(spark, set(REGISTRY))[1]
     assert offenders == {}, f"duplicate output column names: {offenders}"
 
 

@@ -17,7 +17,9 @@ from __future__ import annotations
 
 import math
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 import duckdb
@@ -82,10 +84,19 @@ def check(spark, sf_dir: str, only=None, quiet: bool = False) -> tuple[int, list
 
     Returns (checked_count, failures). ``quiet`` suppresses per-query PASS
     lines (failures always print) — used by tools/full_sweep.py, the
-    standing three-scale close gate (VERDICT r12 #3).
+    standing three-scale close gate (VERDICT r12 #3). DuckDB spills to a
+    temp dir that is removed afterwards, never to ``./.tmp`` in the cwd.
     """
-    only = set(only or ())
-    con = duckdb.connect()
+    tmp_dir = tempfile.mkdtemp(prefix="check-queries-duckdb-")
+    con = duckdb.connect(config={"temp_directory": tmp_dir})
+    try:
+        return _check(con, spark, sf_dir, set(only or ()), quiet)
+    finally:
+        con.close()
+        shutil.rmtree(tmp_dir, ignore_errors=True)
+
+
+def _check(con, spark, sf_dir: str, only: set, quiet: bool) -> tuple[int, list[str]]:
     for t in TESTDATA_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
